@@ -19,20 +19,27 @@ A user of the reference interacts with HTTP routes (src/egraph_app.erl:
 | POST /fquery (invoke)                    | invoke_function          |
 | (background reindexer)                   | reindex                  |
 
-State is three DataFrames (vertices / edges / indexes).  Mutation methods
-return a NEW Engine over the rewritten DataFrames (immutable-table
-semantics — on Delta/Iceberg these become MERGE/DELETE on one table).
+State is three DataFrames (vertices / edges / indexes).  Every mutation
+follows one rule: replace the rows the write names by key
+(:func:`~egraphdb_spark.ingest.replace_rows` — vertices and indexes by
+``id``, edges by ``(src, dst)``), then materialize each changed table once
+and return a NEW Engine over it.  A node's index rows are re-derived from
+that node alone, so a write never rebuilds the whole index table, and each
+version's plan is one scan of the last version, not a chain of every write
+before it.  Unchanged tables pass through untouched.  On Delta/Iceberg each
+replacement is one MERGE/DELETE.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.registry import EngineApi, FunctionRegistry
-from .ingest import build_indexes, delete_nodes, node_id, upsert_nodes
+from .ingest import build_indexes, node_ids, replace_rows, upsert_edges, upsert_nodes
 from .operators import scans, search as search_ops, traversal
+from .operators.checkpoint import cut_lineage
 from .plans.ir import validate
 
 
@@ -89,32 +96,30 @@ class Engine:
 
     # ------------------------------------------------------------- mutation
 
+    def _next(self, **changed: DataFrame) -> "Engine":
+        """The next version: each table the write changed, materialized once."""
+        return replace(self, **{t: cut_lineage(df) for t, df in changed.items()})
+
     def upsert_nodes(self, incoming: DataFrame) -> "Engine":
-        merged = upsert_nodes(self.vertices, incoming)
-        return Engine(self.spark, merged, self.edges, None, self.registry)
+        return self._next(
+            vertices=upsert_nodes(self.vertices, incoming),
+            indexes=replace_rows(self.indexes, ["id"], incoming, build_indexes(incoming)),
+        )
 
     def delete_nodes(self, keys: list[str]) -> "Engine":
-        remaining = delete_nodes(self.vertices, keys)
-        return Engine(self.spark, remaining, self.edges, None, self.registry)
+        ids = node_ids(self.spark, keys)
+        return self._next(
+            vertices=replace_rows(self.vertices, ["id"], ids),
+            indexes=replace_rows(self.indexes, ["id"], ids),
+        )
 
     def upsert_edges(self, links: DataFrame) -> "Engine":
-        from .ingest import make_edges
-
-        merged = (
-            self.edges.join(
-                links.select(node_id("src_key").alias("src"), node_id("dst_key").alias("dst")),
-                ["src", "dst"],
-                "left_anti",
-            ).unionByName(make_edges(links))
-        )
-        return Engine(self.spark, self.vertices, merged, self.indexes, self.registry)
+        return self._next(edges=upsert_edges(self.edges, links))
 
     def reindex(self) -> "Engine":
         """The whole background-reindexer machinery (2048 gen_servers,
         egraph_reindexing_server.erl) as one idempotent derivation."""
-        return Engine(
-            self.spark, self.vertices, self.edges, build_indexes(self.vertices), self.registry
-        )
+        return replace(self, indexes=build_indexes(self.vertices))
 
     def reindex_status(self, n_shards: int = 2048) -> DataFrame:
         """Per-shard rebuild watermarks — the reference's reindex-status

@@ -16,16 +16,18 @@ Reference semantics reproduced here:
 
 Spark-first design: instead of the reference's incremental index
 diff-with-retries protocol (egraph_detail_model.erl:740-777, which tolerates
-dangling rows), the index table is a *deterministic derivation* of the
-vertices table — `build_indexes(vertices)` is idempotent and is also the
-whole "background reindexer" (replaces 2048 gen_servers,
-egraph_reindexing_server.erl:243-321).  All per-row logic is column
+dangling rows), a node's index rows are a *deterministic derivation* of
+that node — `build_indexes(vertices)` is idempotent and is also the whole
+"background reindexer" (replaces 2048 gen_servers,
+egraph_reindexing_server.erl:243-321).  Every write, to any of the three
+tables, follows one rule, :func:`replace_rows`: drop the rows whose key the
+write names, union the replacements.  All per-row logic is column
 expressions (JVM-side, whole-stage codegen); no Python row loops.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from .schema import GEO_TYPE, LC_SUFFIX
 
@@ -184,21 +186,46 @@ def make_edges(links: DataFrame) -> DataFrame:
     )
 
 
+def node_ids(spark: SparkSession, keys: list[str]) -> DataFrame:
+    """One-column ``id`` frame for a list of user keys."""
+    return spark.createDataFrame([(k,) for k in keys], "key string").select(
+        node_id("key").alias("id")
+    )
+
+
+def replace_rows(
+    base: DataFrame, on: list[str], keys: DataFrame, rows: DataFrame | None = None
+) -> DataFrame:
+    """The one write rule for every table: the next version of ``base``.
+
+    Drops the rows of ``base`` whose ``on`` key appears in ``keys``, then
+    unions ``rows`` (if any) onto what is left — an upsert when ``rows``
+    carries the replacements, a delete when it is None.  On Delta/Iceberg
+    this is one MERGE; on immutable tables the result is the new version,
+    which the caller materializes once (``Engine._next``) so the version
+    after it plans over one scan, not over every write before it.
+
+    Broadcast anti-join: ``keys`` is one write's batch, ``base`` is the
+    table — no shuffle of the big side.
+    """
+    left = base.join(F.broadcast(keys.select(*on)), on=on, how="left_anti")
+    left = left.select(base.columns)  # a USING join moves the keys first
+    return left if rows is None else left.unionByName(rows)
+
+
 def upsert_nodes(current: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Version-bumping upsert (reference optimistic-CC semantics).
+    """Version-bumping node upsert: stamp ``version``, then
+    :func:`replace_rows` by ``id``.
 
     Last-writer-wins per key; an incoming row for an existing key bumps
     ``version`` by 1 and replaces details (egraph_detail_model.erl:574-588).
-    Implemented as join + union (MERGE without requiring a Delta runtime).
     Unchanged payloads (same details_hash) keep their version, mirroring the
     reference's AnyChange check (egraph_detail_model.erl:219-246).
     """
-    cur = current.alias("c")
-    inc = incoming.alias("i")
-    joined = inc.join(cur.select("id", F.col("version").alias("_cur_version"),
-                                 F.col("details_hash").alias("_cur_hash")),
-                      on="id", how="left")
-    merged_incoming = joined.select(
+    cur = current.select(
+        "id", F.col("version").alias("_cur_version"), F.col("details_hash").alias("_cur_hash")
+    )
+    stamped = incoming.join(cur, on="id", how="left").select(
         "id", "kind", "key", "details", "details_hash",
         F.when(F.col("_cur_version").isNull(), F.lit(0))
         .when(F.col("_cur_hash") == F.col("details_hash"), F.col("_cur_version"))
@@ -207,30 +234,27 @@ def upsert_nodes(current: DataFrame, incoming: DataFrame) -> DataFrame:
         .alias("version"),
         "updated_at", "index_paths", "lowercase_index_paths",
     )
-    untouched = cur.join(inc.select("id"), on="id", how="left_anti")
-    return untouched.unionByName(merged_incoming)
+    return replace_rows(current, ["id"], incoming, stamped)
 
 
 def delete_nodes(current: DataFrame, keys: list[str]) -> DataFrame:
-    """S18 node delete as an anti-join rewrite (egraph_detail_model.erl:
-    260-277).  On a Delta/Iceberg table this becomes a real DELETE; on
-    immutable parquet the rewritten DataFrame is the new table version.
+    """S18 node delete (egraph_detail_model.erl:260-277): :func:`replace_rows`
+    by ``id`` with no replacement rows."""
+    return replace_rows(current, ["id"], node_ids(current.sparkSession, keys))
 
-    Broadcast anti-join: the key list is tiny, the scan is not — no shuffle
-    of the big side.
-    """
-    spark = current.sparkSession
-    kdf = spark.createDataFrame([(k,) for k in keys], "key string").select(
-        node_id("key").alias("id")
-    )
-    return current.join(F.broadcast(kdf), on="id", how="left_anti")
+
+def upsert_edges(current: DataFrame, links: DataFrame) -> DataFrame:
+    """Edge upsert (POST /link): :func:`replace_rows` by ``(src, dst)`` with
+    the canonical edges of ``links`` — one row per pair, last writer wins."""
+    edges = make_edges(links)
+    return replace_rows(current, ["src", "dst"], edges, edges)
 
 
 def delete_edges(edges: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
     """S18 edge delete: (source, destination) exact pairs
-    (egraph_link_model.erl:229-264)."""
-    spark = edges.sparkSession
-    pdf = spark.createDataFrame(pairs, "src_key string, dst_key string").select(
+    (egraph_link_model.erl:229-264), :func:`replace_rows` with no
+    replacement rows."""
+    pdf = edges.sparkSession.createDataFrame(pairs, "src_key string, dst_key string").select(
         node_id("src_key").alias("src"), node_id("dst_key").alias("dst")
     )
-    return edges.join(F.broadcast(pdf), on=["src", "dst"], how="left_anti")
+    return replace_rows(edges, ["src", "dst"], pdf)

@@ -4,8 +4,9 @@ walks, Lloyd iterations).
 ``localCheckpoint`` stores blocks on executor local storage with NO
 lineage fallback — the right call on the single-JVM test target (no HDFS
 round-trip), but on a preemptible 100-TB cluster a lost executor loses
-its blocks and kills the job.  Every iterative loop in this package
-therefore routes through :func:`cut_lineage`: when the deployment sets a
+its blocks and kills the job.  Every iterative loop in this package, and
+every table version a write produces (``Engine._next``), therefore routes
+through :func:`cut_lineage`: when the deployment sets a
 reliable checkpoint dir (``spark.sparkContext.setCheckpointDir`` on
 HDFS/S3/DBFS), every loop transparently upgrades to reliable
 ``checkpoint()`` with zero per-operator changes.
@@ -13,27 +14,7 @@ HDFS/S3/DBFS), every loop transparently upgrades to reliable
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import DataFrame
-
-# Env-gated phase profiler: every EAGER cut executes the pending DAG, so
-# timing the checkpoint call gives a per-phase breakdown of the iterative
-# algorithms for free.  Off unless SPARK_GRAFT_PROFILE_CUTS is set; the
-# records list is read by tools/profile_query.py.
-_PROFILE = bool(os.environ.get("SPARK_GRAFT_PROFILE_CUTS"))
-PROFILE_RECORDS: list[tuple[str, float]] = []
-
-
-def _caller() -> str:
-    import traceback
-
-    for frame in reversed(traceback.extract_stack(limit=8)[:-2]):
-        fn = os.path.basename(frame.filename)
-        if fn not in ("checkpoint.py", "dataframe.py"):
-            return f"{fn}:{frame.lineno}"
-    return "?"
 
 
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -44,17 +25,7 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 
         frontier = frontier.join(...).transform(cut_lineage)
     """
-    sc = df.sparkSession.sparkContext
-    if _PROFILE and eager:
-        t0 = time.perf_counter()
-        out = (
-            df.checkpoint(eager=True)
-            if sc.getCheckpointDir() is not None
-            else df.localCheckpoint(eager=True)
-        )
-        PROFILE_RECORDS.append((_caller(), time.perf_counter() - t0))
-        return out
-    if sc.getCheckpointDir() is not None:
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..ingest import node_id
+from ..ingest import node_ids
 from .checkpoint import cut_lineage, cut_lineage_lazy
 
 
@@ -32,10 +32,7 @@ def k_hop(edges: DataFrame, src_keys: list[str], depth: int) -> DataFrame:
     within level (the reference nests per-path duplicates; a relational
     result wants the distinct closure per level).
     """
-    spark = edges.sparkSession
-    frontier = spark.createDataFrame(
-        [(k,) for k in src_keys], "key string"
-    ).select(node_id("key").alias("id"))
+    frontier = node_ids(edges.sparkSession, src_keys)
     out = None
     for level in range(1, depth + 1):
         hop = (
@@ -63,10 +60,7 @@ def bfs_path(
     visited + parent walk :36-98).  The parent map stays distributed; only
     the final path walk collects, one tiny lookup per level.
     """
-    spark = edges.sparkSession
-    src_id_row = spark.createDataFrame([(src_key,)], "key string").select(
-        node_id("key").alias("id")
-    )
+    src_id_row = node_ids(edges.sparkSession, [src_key])
 
     frontier = src_id_row
     visited = src_id_row

@@ -187,6 +187,7 @@ def stream_upsert_nodes(
     from pyspark.sql import functions as F2
 
     from ..ingest import make_vertices, upsert_nodes
+    from ..operators.checkpoint import cut_lineage
 
     state = {"vertices": current_vertices}
 
@@ -198,9 +199,7 @@ def stream_upsert_nodes(
             F2.array().cast("array<array<string>>").alias("lowercase_index_paths"),
         )
         incoming = make_vertices(nodes, kind=F2.lit("event"))
-        state["vertices"] = upsert_nodes(state["vertices"], incoming).localCheckpoint(
-            eager=True
-        )
+        state["vertices"] = cut_lineage(upsert_nodes(state["vertices"], incoming))
         sink.append(state["vertices"])
 
     return events, on_batch

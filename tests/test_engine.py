@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from egraphdb_spark.engine import Engine
+from egraphdb_spark.ingest import make_vertices
 from egraphdb_spark.plans.ir import QueryIRError, validate
 
 
@@ -62,6 +63,81 @@ def test_upsert_edges_and_edge_lookup(engine, spark):
     got = e2.edge("region:0", "region:1").collect()
     assert len(got) == 1
     assert engine.edge("region:0", "region:1").count() == 0
+    # re-upserting an existing (src, dst) replaces it: one row, new details
+    relinked = spark.createDataFrame(
+        [("region:0", "region:1", '{"rel": "border"}')],
+        "src_key string, dst_key string, details string",
+    )
+    got = e2.upsert_edges(relinked).edge("region:0", "region:1").collect()
+    assert [r["details"] for r in got] == ['{"rel": "border"}']
+
+
+def _nodes(spark, rows):
+    """(key, details, index_paths) tuples → canonical incoming vertices."""
+    df = spark.createDataFrame(
+        [(k, d, p, []) for k, d, p in rows],
+        "key string, details string, index_paths array<array<string>>, "
+        "lowercase_index_paths array<array<string>>",
+    )
+    return make_vertices(df, kind=F.lit("test"))
+
+
+def _leaves(df):
+    return df._jdf.queryExecution().analyzed().collectLeaves().size()
+
+
+def test_chained_upserts_keep_plans_flat(engine, spark):
+    """Each write's version is planned over the last version, not over the
+    chain of every write before it."""
+    eng, leaves = engine, []
+    for i in range(4):
+        eng = eng.upsert_nodes(_nodes(spark, [(f"chain:{i}", f'{{"n": {i}}}', [["n"]])]))
+        leaves.append((_leaves(eng.vertices), _leaves(eng.indexes)))
+    assert leaves[-1][0] <= leaves[0][0], leaves
+    assert leaves[-1][1] <= leaves[0][1], leaves
+
+
+def _by_name(eng, name, value):
+    cond = {"key": value, "key_type": "text", "index_name": name}
+    return (
+        eng.search({"conditions": {"any": [cond]}}).count(),
+        eng.index_search(cond).count(),
+    )
+
+
+def test_write_chain_keeps_indexes_equal_to_reindex(engine, spark):
+    """Per-id index maintenance across upserts, a delete and an edge upsert
+    ends exactly where a full re-derivation does."""
+    c7 = engine.get_detail("customer:7").head()
+    r1 = engine.get_detail("region:1").head()
+    retagged = c7["details"][:-1] + ', "tier": "gold"}'
+    eng = engine.upsert_nodes(_nodes(spark, [("customer:7", retagged, [["tier"]])]))
+    eng = eng.upsert_nodes(_nodes(spark, [("fresh:1", '{"sku": "zz-42"}', [["sku"]])]))
+    eng = eng.upsert_nodes(
+        _nodes(spark, [("region:1", r1["details"], [list(p) for p in r1["index_paths"]])])
+    )
+    versions = {r["key"]: r["version"] for r in eng.multi_get(
+        ["customer:7", "fresh:1", "region:1"]).collect()}
+    assert versions == {"customer:7": c7["version"] + 1, "fresh:1": 0,
+                        "region:1": r1["version"]}
+    assert _by_name(eng, "tier", "gold") == (1, 1)
+    # customer:7 no longer declares c_name: its old index rows are gone
+    assert _by_name(engine, "c_name", "Customer#000000007") == (1, 1)
+    assert _by_name(eng, "c_name", "Customer#000000007") == (0, 0)
+    assert _by_name(eng, "sku", "zz-42") == (1, 1)
+    c9 = "Customer#000000009"
+    assert _by_name(eng, "c_name", c9) == (1, 1)
+
+    eng = eng.delete_nodes(["fresh:1", "customer:9"])
+    eng = eng.upsert_edges(spark.createDataFrame(
+        [("region:1", "region:2", '{"rel": "adjacent"}')],
+        "src_key string, dst_key string, details string",
+    ))
+    assert _by_name(eng, "sku", "zz-42") == (0, 0)
+    assert _by_name(eng, "c_name", c9) == (0, 0)
+    full = eng.reindex().indexes
+    assert eng.indexes.exceptAll(full).count() == 0
+    assert full.exceptAll(eng.indexes).count() == 0
 
 
 def test_function_registry_endpoint(engine):
